@@ -162,6 +162,7 @@ def run_flagship(
     joined = out["join_rows"].join(F.broadcast(out["tile_assignment"]), "osm_id")
     n_rows = joined.count()
     secs = time.perf_counter() - t0
+    spark.catalog.clearCache()  # flagship's cached join rows and cells
     return secs, n_docs, n_rows
 
 

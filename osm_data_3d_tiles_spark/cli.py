@@ -50,25 +50,12 @@ def cmd_generate_tileset(args) -> int:
 def cmd_seed(args) -> int:
     """Materialize every owned tile as B3DM + tileset JSONs (seed-b3dm.ts, but
     distributed: ownership window → per-tile build → foreachPartition write)."""
-    from pyspark.sql import functions as F
-
-    from .functions.params import with_building_params
-    from .operators.batch_table import batch_tables
-    from .operators.build3d import build_tiles_3d
-    from .operators.cells import building_cells
-    from .operators.ownership import owner_tiles
-    from .plans.tileset import write_tileset
-    from .sinks.b3dm import seed_tiles
+    from .plans.pipeline import seed_extent
     from .sources import fixtures as fx
 
     spark = _spark(args)
-    blds = fx.load_fixture(spark, "buildings", args.sf).filter(F.col("layer") == "buildings")
-    owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
-    assigned = blds.join(owners, "osm_id")
-    tiles = build_tiles_3d(with_building_params(assigned))
-    batch = batch_tables(assigned)
-    n = seed_tiles(tiles, batch, args.out)
-    write_tileset(args.out, fx.FIXTURE_EXTENT, mode=args.mode)
+    blds = fx.load_fixture(spark, "buildings", args.sf)
+    n = seed_extent(blds, args.out, fx.FIXTURE_EXTENT, mode=args.mode)
     print(json.dumps({"tiles_written": n, "out": args.out}))
     return 0
 

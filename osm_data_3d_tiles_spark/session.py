@@ -75,9 +75,10 @@ def with_min_parallelism(df, factor: int = 1):
     `df.rdd.getNumPartitions()` here forces AQE to materialize every upstream
     query stage serially (measured as a 10× slowdown of the composed flagship
     plan). Instead the guard looks at the leaf scan's file list — a pure
-    metadata call. Derived frames (no file scan underneath, or many files)
-    pass through untouched: their parallelism is whatever the upstream stage
-    established. On a real cluster reading thousands of files this is always a
+    metadata call. `inputFiles()` on a derived frame returns the files of the
+    scans under it, so a derived frame over a few small files is repartitioned
+    too; only frames with no file scan underneath (or many files) pass through
+    untouched. On a real cluster reading thousands of files this is always a
     no-op; locally it round-robins narrow columns once and unlocks all cores."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor

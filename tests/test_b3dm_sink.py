@@ -13,18 +13,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osm_data_3d_tiles_spark.functions.params import with_building_params
-from osm_data_3d_tiles_spark.operators.batch_table import batch_tables
-from osm_data_3d_tiles_spark.operators.build3d import build_tiles_3d
-from osm_data_3d_tiles_spark.operators.cells import building_cells
-from osm_data_3d_tiles_spark.operators.ownership import owner_tiles
-from osm_data_3d_tiles_spark.plans.tileset import write_tileset
-from osm_data_3d_tiles_spark.sinks.b3dm import (
-    pack_b3dm,
-    pack_glb,
-    parse_b3dm,
-    seed_tiles,
-)
+from osm_data_3d_tiles_spark.plans.pipeline import seed_extent
+from osm_data_3d_tiles_spark.sinks.b3dm import pack_b3dm, pack_glb, parse_b3dm
 from osm_data_3d_tiles_spark.sinks.serve_fixture import TileServerFixture
 from osm_data_3d_tiles_spark.sources import fixtures as fx
 
@@ -175,15 +165,26 @@ class TestGlbPacking:
 @pytest.fixture(scope="module")
 def seeded_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("export"))
-    blds = fx.load_fixture(spark, "buildings", 0.001).filter(F.col("layer") == "buildings")
-    owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
-    assigned = blds.join(owners, "osm_id")
-    tiles = build_tiles_3d(with_building_params(assigned))
-    batch = batch_tables(assigned)
-    n = seed_tiles(tiles, batch, out)
+    n = seed_extent(fx.load_fixture(spark, "buildings", 0.001), out, fx.FIXTURE_EXTENT)
     assert n > 0
-    write_tileset(out, fx.FIXTURE_EXTENT, mode="mercator")
     return out
+
+
+def tileset_content_uris(out_dir: str) -> set[str]:
+    """Tile content uris reachable from {out_dir}/tileset.json through its subtile json files."""
+    uris, todo = set(), ["tileset.json"]
+    while todo:
+        with open(os.path.join(out_dir, todo.pop())) as f:
+            nodes = [json.load(f)["root"]]
+        while nodes:
+            node = nodes.pop()
+            uri = node.get("content", {}).get("uri", "")
+            if uri.endswith(".json"):
+                todo.append(uri)
+            elif uri:
+                uris.add(uri)
+            nodes.extend(node.get("children", ()))
+    return uris
 
 
 class TestSeedPath:
@@ -200,6 +201,37 @@ class TestSeedPath:
             assert "box_center" in bt and len(bt["box_center"]) == bl
             # boxCenter z pinned to 10 (b3dmGenerator.ts:244-246)
             assert all(c[2] == 10.0 for c in bt["box_center"])
+
+    def test_edge_straddler_in_referenced_tile(self, spark, tmp_path):
+        """A footprint crossing the extent's west edge is owned by a tile inside
+        the extent, so the B3DM holding it is one tileset.json references."""
+        blds = fx.load_fixture(spark, "buildings", 0.001).filter(F.col("layer") == "buildings")
+        src = blds.orderBy("osm_id").first()
+        xs = [p[0] for p in src["geometry"][0]]
+        west = fx.FIXTURE_EXTENT[0]
+        dx = west - (min(xs) + max(xs)) / 2
+        new_id = 99_000_001
+        straddler = (
+            blds.filter(F.col("osm_id") == src["osm_id"])
+            .withColumn("osm_id", F.lit(new_id).cast("long"))
+            .withColumn(
+                "geometry",
+                F.expr(f"transform(geometry, r -> transform(r, p -> array(p[0] + {dx!r}, p[1])))"),
+            )
+        )
+        moved = straddler.first()["geometry"][0]
+        assert min(p[0] for p in moved) < west < max(p[0] for p in moved)
+
+        out = str(tmp_path)
+        seed_extent(straddler, out, fx.FIXTURE_EXTENT)
+        holders = []
+        for fn in os.listdir(os.path.join(out, "b3dm")):
+            with open(os.path.join(out, "b3dm", fn), "rb") as f:
+                urls = parse_b3dm(f.read())["batch_table"]["osm_url"]
+            if any(u.endswith(f"/{new_id}") for u in urls):
+                holders.append(fn)
+        assert len(holders) == 1
+        assert holders[0] in tileset_content_uris(out)
 
     def test_tileset_json_written(self, seeded_dir):
         with open(os.path.join(seeded_dir, "tileset.json")) as f:

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from osm_data_3d_tiles_spark.functions import geometry as g
 from osm_data_3d_tiles_spark.functions import mercator as m
 from osm_data_3d_tiles_spark.functions import text as tx
+from osm_data_3d_tiles_spark.operators.batch_table import batch_tables
 from osm_data_3d_tiles_spark.operators.cells import building_cells, covered_cells_for_building
 from osm_data_3d_tiles_spark.operators.knn import building_centroids, knn_bruteforce, knn_kring
 from osm_data_3d_tiles_spark.operators.ownership import owner_tiles
@@ -106,6 +107,72 @@ class TestSpatialJoin:
         assert key(a) == key(b)
 
 
+def _seq(jseq):
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _plan_paths(df, into_cache=False):
+    """Root-to-leaf paths of the executed physical plan as (node name, output
+    column names) pairs, seen through AQE wrappers and query stages. With
+    `into_cache`, an InMemoryTableScan continues into the plan that filled it."""
+
+    def walk(node, path):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), path)
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan(), path)
+        if cls == "ReusedExchangeExec":
+            return walk(node.child(), path)
+        path = path + [(node.nodeName(), {a.name() for a in _seq(node.output())})]
+        children = _seq(node.children())
+        if into_cache and cls == "InMemoryTableScanExec":
+            children = [node.relation().cachedPlan()]
+        if not children:
+            return [path]
+        return [p for c in children for p in walk(c, path)]
+
+    return walk(df._jdf.queryExecution().executedPlan(), [])
+
+
+def _exchange_between_python_stages(path) -> bool:
+    """refine MapInPandas (url, osm_id) above a shuffle Exchange above the
+    extract MapInPandas (url, x, y), with no broadcast in between: the probe
+    side of the join, extract and refine in separate tasks."""
+    names = [n for n, _ in path]
+    for i, (name, cols) in enumerate(path):
+        if name != "MapInPandas" or "osm_id" not in cols:
+            continue
+        for k in range(i + 1, len(path)):
+            name_k, cols_k = path[k]
+            if name_k == "BroadcastExchange":
+                break
+            if name_k == "MapInPandas" and {"url", "x", "y"} <= cols_k:
+                return "Exchange" in names[i + 1:k]
+    return False
+
+
+class TestFlagshipPlan:
+    def test_each_stage_runs_once(self, spark, pages, buildings):
+        """No text extraction on the join path; tile_doc_counts reads the
+        cached join rows instead of re-running extract + refine; the probe-side
+        Exchange keeps the two Python stages in separate tasks."""
+        out = flagship(pages, buildings)
+        try:
+            for name, df in out.items():
+                assert "text_extracted" not in df._jdf.queryExecution().toString(), name
+            out["join_rows"].collect()
+            counts = out["tile_doc_counts"]
+            counts.collect()
+            names = {n for p in _plan_paths(counts) for n, _ in p}
+            assert "InMemoryTableScan" in names
+            assert "MapInPandas" not in names
+            paths = _plan_paths(out["join_rows"], into_cache=True)
+            assert any(_exchange_between_python_stages(p) for p in paths)
+        finally:
+            spark.catalog.clearCache()
+
+
 class TestOwnership:
     def test_exactly_one_owner(self, buildings):
         blds = buildings.filter(F.col("layer") == "buildings")
@@ -129,9 +196,15 @@ class TestOwnership:
         assert (cells["count"] > 1).any()
 
 
+def owner_batch_tables(buildings):
+    blds = buildings.filter(F.col("layer") == "buildings")
+    assignment = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
+    return batch_tables(blds.join(assignment, "osm_id"))
+
+
 class TestBatchTables:
-    def test_shapes_and_order(self, spark, pages, buildings):
-        out = flagship(pages, buildings)["batch"].toPandas()
+    def test_shapes_and_order(self, spark, buildings):
+        out = owner_batch_tables(buildings).toPandas()
         assert (out["batch_length"] > 0).all()
         for _, row in out.iterrows():
             assert len(row["osm_id"]) == row["batch_length"]
@@ -143,8 +216,8 @@ class TestBatchTables:
         n_blds = buildings.filter(F.col("layer") == "buildings").count()
         assert total == n_blds  # each building in exactly its owner tile
 
-    def test_osm_url(self, spark, pages, buildings):
-        out = flagship(pages, buildings)["batch"].toPandas()
+    def test_osm_url(self, spark, buildings):
+        out = owner_batch_tables(buildings).toPandas()
         urls = [u for row in out["osm_url"] for u in row]
         assert all(u.startswith("https://www.openstreetmap.org/") for u in urls)
 
