@@ -14,6 +14,22 @@ import math
 import numpy as np
 
 # ---------------------------------------------------------------------------
+# Nested geometry values
+# ---------------------------------------------------------------------------
+
+
+def ring_xy(ring) -> np.ndarray:
+    """One ring of a nested geometry value — a list of [x, y] points (Spark
+    Row) or an object array of point arrays (Arrow → pandas) — as a float64
+    (n, 2) array of the points' x, y; an empty ring gives shape (0, 2). A
+    ring that is already a float64 array is not copied."""
+    if isinstance(ring, np.ndarray) and ring.dtype == object:
+        ring = ring.tolist()
+    xy = np.asarray(ring, dtype=np.float64)
+    return xy[:, :2] if xy.ndim == 2 else np.empty((0, 2))
+
+
+# ---------------------------------------------------------------------------
 # Winding / area / centroid
 # ---------------------------------------------------------------------------
 

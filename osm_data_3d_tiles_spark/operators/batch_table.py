@@ -61,11 +61,7 @@ def with_box_center(buildings: DataFrame) -> DataFrame:
         for pdf in batches:
             centers = []
             for rings_raw in pdf["geometry"]:
-                rings = [
-                    np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
-                    for ring in rings_raw
-                ]
-                ix, iy = g.interior_point(rings)
+                ix, iy = g.interior_point([g.ring_xy(ring) for ring in rings_raw])
                 lon, lat = m.merc_to_lonlat(np.array([ix]), np.array([iy]))
                 centers.append([float(lon[0]), float(lat[0]), 10.0])
             pdf = pdf.copy()

@@ -48,9 +48,11 @@ END_OF_WORD = "</w>"
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Distinct whitespace-delimited words with corpus frequencies."""
+    """Distinct whitespace-delimited words with corpus frequencies. `(?U)`
+    makes Java's \\s match Unicode whitespace (NBSP, em space, …) as Python's
+    str.split() does; plain \\s is ASCII-only."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("word"))
+        docs.select(F.explode(F.split(F.col(text_col), r"(?U)\s+")).alias("word"))
         .where(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))

@@ -59,7 +59,7 @@ def _normalize_rings(rings_raw, ring_types, offset_x: float, offset_y: float):
     (build3dBuilding.ts:30-72: outer→clockwise, inner→counter-clockwise)."""
     out = []
     for ring, rtype in zip(rings_raw, ring_types):
-        arr = np.asarray([[float(p[0]) - offset_x, float(p[1]) - offset_y] for p in ring])
+        arr = g.ring_xy(ring) - (offset_x, offset_y)
         if rtype == "outer":
             arr = g.ensure_clockwise(arr)
         else:
@@ -310,8 +310,7 @@ def building_labels(buildings_with_params: DataFrame) -> DataFrame:
             ids, labels, xs, hs, ys, prio = [], [], [], [], [], []
             for row in pdf.itertuples():
                 outers = [
-                    np.asarray([[float(p[0]), float(p[1])] for p in ring])
-                    for ring, t in zip(row.geometry, row.ring_types) if t == "outer"
+                    g.ring_xy(ring) for ring, t in zip(row.geometry, row.ring_types) if t == "outer"
                 ]
                 if not outers:
                     continue

@@ -32,7 +32,7 @@ def _rings_to_grid(rings, z: int) -> list[np.ndarray]:
     span = m.tile_span(z)
     out = []
     for ring in rings:
-        r = np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
+        r = g.ring_xy(ring)
         gx = (r[:, 0] + m.HALF_SIZE) / span
         gy = (m.HALF_SIZE - r[:, 1]) / span
         out.append(np.column_stack([gx, gy]))
@@ -44,36 +44,10 @@ def covered_cells_for_building(rings, ring_types, z: int = m.Z_LEAF) -> set[tupl
     return g.covered_cells(grid_rings, list(ring_types), 1.0)
 
 
-CELLS_SCHEMA = T.StructType(
-    [
-        T.StructField("osm_id", T.LongType()),
-        T.StructField("tile_x", T.LongType()),
-        T.StructField("tile_y", T.LongType()),
-    ]
-)
-
-
 def building_cells(buildings: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
     """buildings(osm_id, geometry, ring_types, …) → (osm_id, tile_x, tile_y) —
     one row per covering z-level cell."""
-
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            xs: list[int] = []
-            ys: list[int] = []
-            for osm_id, rings, rtypes in zip(pdf["osm_id"], pdf["geometry"], pdf["ring_types"]):
-                for cx, cy in sorted(covered_cells_for_building(rings, rtypes, z)):
-                    ids.append(osm_id)
-                    xs.append(cx)
-                    ys.append(cy)
-            yield pd.DataFrame({"osm_id": ids, "tile_x": xs, "tile_y": ys})
-
-    from ..session import with_min_parallelism
-
-    return with_min_parallelism(buildings.select("osm_id", "geometry", "ring_types")).mapInPandas(
-        _explode, schema=CELLS_SCHEMA
-    )
+    return building_cells_multi(buildings, (z,)).drop("z")
 
 
 MULTI_CELLS_SCHEMA = T.StructType(
@@ -99,6 +73,7 @@ def building_cells_multi(buildings: DataFrame, zs: tuple[int, ...]) -> DataFrame
             xs: list[int] = []
             ys: list[int] = []
             for osm_id, rings, rtypes in zip(pdf["osm_id"], pdf["geometry"], pdf["ring_types"]):
+                rings = [g.ring_xy(ring) for ring in rings]  # decoded once for every z
                 for z in zs:
                     for cx, cy in sorted(covered_cells_for_building(rings, rtypes, z)):
                         ids.append(osm_id)

@@ -58,7 +58,8 @@ def hashed_ngram_buckets(
         raise ValueError(f"n_buckets must be in [1, 65536], got {n_buckets}")
     words = docs.select(
         F.col(id_col),
-        F.expr(f"filter(split({text_col}, '\\\\s+'), w -> w != '')").alias("ws"),
+        # (?U): Unicode whitespace, as Python's re.split(r"\s+") splits on
+        F.expr(f"filter(split({text_col}, '(?U)\\\\s+'), w -> w != '')").alias("ws"),
     )
     buckets_expr = (
         "transform("

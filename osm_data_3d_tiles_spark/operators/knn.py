@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,9 +48,7 @@ def building_centroids(buildings: DataFrame) -> DataFrame:
         for pdf in batches:
             ids, xs, ys = [], [], []
             for osm_id, rings in zip(pdf["osm_id"], pdf["geometry"]):
-                ring = np.asarray(
-                    [[float(p[0]), float(p[1])] for p in rings[0]], dtype=np.float64
-                )
+                ring = g.ring_xy(rings[0])
                 ring = ring[:-1] if (ring[0] == ring[-1]).all() else ring
                 cx, cy = g.polygon_centroid(ring)
                 ids.append(osm_id)

@@ -152,10 +152,7 @@ def spatial_join(
         def _refine_cogrouped(cand_pdf: pd.DataFrame, geom_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(cand_pdf) == 0 or len(geom_pdf) == 0:
                 return pd.DataFrame({n: [] for n in names})
-            rings = [
-                np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
-                for ring in geom_pdf["geometry"].iloc[0]
-            ]
+            rings = [g.ring_xy(ring) for ring in geom_pdf["geometry"].iloc[0]]
             pts = np.column_stack(
                 [
                     cand_pdf["x"].to_numpy(dtype=np.float64),
@@ -174,13 +171,7 @@ def spatial_join(
 
     # broadcast refine: ring dict once per worker via a Spark broadcast variable
     geom_rows = buildings.select("osm_id", "geometry").collect()
-    geoms = {
-        row["osm_id"]: [
-            np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
-            for ring in row["geometry"]
-        ]
-        for row in geom_rows
-    }
+    geoms = {row["osm_id"]: [g.ring_xy(ring) for ring in row["geometry"]] for row in geom_rows}
     geom_bc = spark.sparkContext.broadcast(geoms)
     refine_fn, schema = _pip_refine_factory(("x", "y"), out_fields, geom_bc)
     return cand.select(*needed).mapInPandas(refine_fn, schema=schema)

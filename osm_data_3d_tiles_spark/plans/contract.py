@@ -776,7 +776,6 @@ def build_queries() -> dict:
     def box_center(spark, sf_dir):
         from collections.abc import Iterator
 
-        import numpy as np
         import pandas as pd
 
         from ..functions import geometry as g
@@ -794,11 +793,7 @@ def build_queries() -> dict:
             for pdf in batches:
                 ids, mx, my = [], [], []
                 for osm_id, rings_raw in zip(pdf["osm_id"], pdf["geometry"]):
-                    rings = [
-                        np.asarray([[float(p[0]), float(p[1])] for p in ring])
-                        for ring in rings_raw
-                    ]
-                    x, y = g.interior_point(rings)
+                    x, y = g.interior_point([g.ring_xy(ring) for ring in rings_raw])
                     ids.append(osm_id)
                     mx.append(x)
                     my.append(y)

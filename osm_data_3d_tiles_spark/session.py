@@ -65,8 +65,8 @@ def _parse_bytes(raw: str) -> int:
         return 128 * 1024 * 1024
 
 
-def with_min_parallelism(df, factor: int = 1):
-    """Ensure a scan-rooted DataFrame has at least defaultParallelism×factor
+def with_min_parallelism(df):
+    """Ensure a scan-rooted DataFrame has at least defaultParallelism
     partitions before a CPU-bound Arrow/Python stage.
 
     Single parquet files below spark.sql.files.maxPartitionBytes arrive as ONE
@@ -81,7 +81,7 @@ def with_min_parallelism(df, factor: int = 1):
     untouched. On a real cluster reading thousands of files this is always a
     no-op; locally it round-robins narrow columns once and unlocks all cores."""
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:

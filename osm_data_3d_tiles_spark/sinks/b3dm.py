@@ -2,36 +2,28 @@
 Model tiles (the public 3D Tiles 1.0 format: 28-byte header + featureTable JSON +
 batchTable JSON + binary glTF payload).
 
-Reference path (/root/reference/src/b3dmGenerator.ts:162-256): three.js GLTF
-export → weld → Draco compress → `createB3dmTileDataFromGlb`. Our payload is an
-uncompressed glTF 2.0 binary built by direct struct packing (no 3D runtime
-needed): one mesh primitive with POSITION / NORMAL / TEXCOORD_0 / _BATCHID
-accessors — the same attribute set the reference exports
-(build3dBuilding.ts:102-108). Draco compression ships as an injectable seam
-(`compress=` on pack_glb/b3dm_for_tile): no codec library exists in this
-sandbox, so the default emits uncompressed tiles — a byte-level codec applied
-at the very end of the reference sink that changes no verified semantics
-(SURVEY.md §2.1 "we verify the *table*, not Draco bytes"); a deployment with a
-Draco encoder plugs it in and gets KHR_draco_mesh_compression tiles.
+Reference path (b3dmGenerator.ts:162-256): three.js GLTF export → weld → Draco
+compress → `createB3dmTileDataFromGlb`. This sink runs the same weld and packs
+the glTF 2.0 binary directly with struct (no 3D runtime needed): one indexed
+mesh primitive with POSITION / NORMAL / TEXCOORD_0 / _BATCHID accessors — the
+attribute set the reference exports (build3dBuilding.ts:102-108).
 
-DECISION (round 5, closing the r4 VERDICT item): the Draco bitstream itself is
-permanently out of in-sandbox scope, and KHR_mesh_quantization
-(`pack_glb_quantized`) is this engine's compressed sink codec. Rationale: a
-from-scratch Draco encoder (rANS entropy coding + connectivity coder +
-prediction transforms) could only be tested against ITSELF here — no reference
-decoder exists in the sandbox, so a decode-reencode round-trip would prove
-self-consistency, not spec conformance, while risking subtly non-conformant
-bytes that every real loader rejects. KHR_mesh_quantization achieves the same
-goal (quantized attribute storage, ~4x position/normal size reduction)
-as a core glTF 2.0 extension whose output is plain spec-valid glTF — verified
-here by structural decode (`unpack_glb`) plus pinned byte goldens
-(`quantized_tile_stats`). Deployments that need Draco parity with the
-reference inject the real codec through `compress=`.
+DECISION: the Draco bitstream is out of scope for good, and
+KHR_mesh_quantization (`pack_glb(quantize=True)`) is this engine's compressed
+codec. A from-scratch Draco encoder (rANS entropy coding + connectivity coder +
+prediction transforms) could only be tested against ITSELF — without a
+reference decoder, a decode-reencode round-trip proves self-consistency, not
+spec conformance, while risking subtly non-conformant bytes that every real
+loader rejects. KHR_mesh_quantization reaches the same goal (quantized
+attribute storage, ~2.4x smaller vertex payload) as a core glTF 2.0 extension
+whose output is plain spec-valid glTF — verified by structural decode
+(`unpack_glb`) plus pinned byte goldens (`quantized_tile_stats`). Seeded tiles
+stay unquantized.
 
 The seed path (`seed_tiles`) is the Spark mapping of seed-b3dm.ts:14-65 — one
 batch job materializing every tile, executed with foreachPartition so tile bytes
-never collect on the driver. In the sandbox the sink writes a local directory; on
-a cluster the same code targets a mounted object store path.
+never collect on the driver. Locally the sink writes a directory; on a cluster
+the same code targets a mounted object store path.
 """
 
 from __future__ import annotations
@@ -60,11 +52,10 @@ WELD_TOLERANCE = 1e-10  # reference: b3dmGenerator.ts:169-181 (mergeVertices tol
 
 def weld_vertices(
     pos: np.ndarray, nrm: np.ndarray, tex: np.ndarray, bid: np.ndarray,
-    tolerance: float = WELD_TOLERANCE,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Merge vertices whose FULL attribute tuple (position, normal, uv,
-    batch id) agrees within `tolerance` (quantized to the tolerance grid, the
-    same rule as the reference's three.js mergeVertices at
+    batch id) agrees within WELD_TOLERANCE (quantized to the tolerance grid,
+    the same rule as the reference's three.js mergeVertices at
     b3dmGenerator.ts:169-181) → (pos, nrm, tex, bid, indices). First occurrence
     wins; triangle winding is preserved because only indices are remapped."""
     attrs = np.column_stack([pos, nrm, tex, bid.reshape(-1, 1)]).astype(np.float64)
@@ -72,7 +63,7 @@ def weld_vertices(
     # int64; float32 attribute spacing ≫ tolerance, so this is an exact-match
     # merge on the stored float32 values (the reference's post-quantization
     # behavior), never a lossy snap
-    keys = np.round(attrs / tolerance).astype(np.int64)
+    keys = np.round(attrs / WELD_TOLERANCE).astype(np.int64)
     _, first_idx, inverse = np.unique(keys, axis=0, return_index=True, return_inverse=True)
     # np.unique sorts — remap so output vertices keep first-appearance order
     order = np.argsort(first_idx, kind="stable")
@@ -84,12 +75,11 @@ def weld_vertices(
 
 
 def _glb_bytes(gltf: dict, bin_bytes: bytes | None) -> bytes:
-    """Assemble the GLB container (single place for the alignment rules all
-    four emitters share): JSON chunk space-padded to 4, BIN chunk zero-padded
-    to 4, total length 8-aligned via extra JSON spaces — slack goes in the
-    JSON chunk because padding BIN past buffer.byteLength by 4+ trips strict
-    validators (BUFFER_GLB_CHUNK_TOO_BIG); inside a b3dm whose body starts
-    8-aligned this keeps the tile's total 8-aligned."""
+    """Assemble the GLB container: JSON chunk space-padded to 4, BIN chunk
+    zero-padded to 4, total length 8-aligned via extra JSON spaces — slack goes
+    in the JSON chunk because padding BIN past buffer.byteLength by 4+ trips
+    strict validators (BUFFER_GLB_CHUNK_TOO_BIG); inside a b3dm whose body
+    starts 8-aligned this keeps the tile's total 8-aligned."""
     json_bytes = _pad(json.dumps(gltf, separators=(",", ":")).encode(), 4, b" ")
     if bin_bytes is not None:
         bin_bytes = _pad(bin_bytes, 4, b"\x00")
@@ -105,233 +95,117 @@ def _glb_bytes(gltf: dict, bin_bytes: bytes | None) -> bytes:
     return out
 
 
+def _gltf(node: dict, quantize: bool, **body) -> dict:
+    """The glTF document around one scene with one node."""
+    gltf = {
+        "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
+        "scene": 0,
+        "scenes": [{"nodes": [0]}],
+        "nodes": [node],
+        **body,
+    }
+    if quantize:
+        gltf["extensionsUsed"] = ["KHR_mesh_quantization"]
+        gltf["extensionsRequired"] = ["KHR_mesh_quantization"]
+    return gltf
+
+
 def pack_glb(
     position: np.ndarray,
     normal: np.ndarray,
     uv: np.ndarray,
     batch_id: np.ndarray,
-    weld: bool = True,
-    compress=None,
     quantize: bool = False,
 ) -> bytes:
-    """Triangle mesh → glTF 2.0 binary (one buffer; indexed when welded).
+    """Triangle mesh → glTF 2.0 binary: one buffer, one primitive indexed over
+    the welded vertices (flat-roof fans and wall strips share almost every
+    vertex; the reference runs the same weld before export).
 
-    `quantize=True` emits a self-contained KHR_mesh_quantization GLB (the
-    documented in-sandbox alternative to the reference's Draco stage,
-    /root/reference/src/b3dmGenerator.ts:182-195): POSITION as uint16 on a
-    65535-step grid over the mesh bbox (node scale+translation restores
-    world space — the same "scene" quantization volume Draco uses), NORMAL
-    as normalized int8. No codec library needed, standard glTF extension,
-    ~2.4x smaller vertex payload; decode-reencode round-trip pinned in
-    tests/test_b3dm_sink.py.
+    `quantize=True` emits a self-contained KHR_mesh_quantization GLB: POSITION
+    as uint16 on a 65535-step grid over the mesh bbox (node scale+translation
+    restores world space — the same "scene" quantization volume the
+    reference's Draco stage uses, b3dmGenerator.ts:182-195), NORMAL as
+    normalized int8. TEXCOORD_0/_BATCHID stay float (wall UVs tile past
+    [0,1], which normalized quantization cannot represent). Vertex
+    bufferViews then carry byteStride as a multiple of 4, so VEC3<u16> packs
+    at stride 8 (2 pad bytes) and VEC3<i8> at stride 4 (1 pad byte).
 
-    weld=True deduplicates vertices shared by adjacent triangles (flat-roof
-    fans, wall strips share almost every vertex) into an indexed mesh —
-    the reference runs the same weld before export; skipping it inflates every
-    tile's vertex buffers with duplicates.
-
-    `compress` is the optional Draco seam (reference parity:
-    /root/reference/src/b3dmGenerator.ts:182-195 — EDGEBREAKER, quantization
-    volume "scene"; no codec library exists in this sandbox, so the default
-    None emits the identical uncompressed GLB this sink always produced).
-    Signature: compress(pos, nrm, tex, bid, indices) -> bytes (the Draco
-    buffer). When supplied, the GLB carries one bufferView with the codec
-    bytes, KHR_draco_mesh_compression on the primitive (attribute ids in
-    POSITION/NORMAL/TEXCOORD_0/_BATCHID order), and accessors without
-    bufferView per the extension spec — a cluster deployment with draco
-    installed plugs its encoder here and gets reference-parity tiles."""
+    glTF 2.0 forbids count-0 accessors and zero-length bufferViews/buffers,
+    so an empty mesh emits a MESHLESS (but valid) GLB: one empty node, no
+    accessors; a quantized one still declares the extension so
+    format-branching callers stay consistent."""
     pos = np.asarray(position, dtype=np.float32).reshape(-1, 3)
     nrm = np.asarray(normal, dtype=np.float32).reshape(-1, 3)
     tex = np.asarray(uv, dtype=np.float32).reshape(-1, 2)
     bid = np.asarray(batch_id, dtype=np.float32).reshape(-1)
-    indices: np.ndarray | None = None
-    if (weld or compress is not None or quantize) and len(pos):
-        # draco needs the indexed mesh — always weld before compressing
-        pos, nrm, tex, bid, indices = weld_vertices(pos, nrm, tex, bid)
-    n = len(pos)
+    if not len(pos):
+        return _glb_bytes(_gltf({}, quantize), None)
+    pos, nrm, tex, bid, indices = weld_vertices(pos, nrm, tex, bid)
 
-    if n == 0:
-        # glTF 2.0 forbids count-0 accessors / zero-length bufferViews and
-        # buffers, so an empty mesh emits a MESHLESS (but valid) GLB — one
-        # empty node, no accessors; the quantization extension is still
-        # declared so format-branching callers stay consistent
-        return _pack_glb_meshless(quantized=quantize)
-    if compress is not None and indices is not None:
-        return _pack_glb_draco(pos, nrm, tex, bid, indices, compress)
+    node = {"mesh": 0}
+    # (data, componentType, byteStride, extra accessor fields) per attribute
     if quantize:
-        return _pack_glb_quantized(pos, nrm, tex, bid, indices)
+        lo = pos.min(axis=0)
+        extent = (pos.max(axis=0) - lo).astype(np.float64)
+        scale = np.where(extent > 0, extent / 65535.0, 1.0)
+        pos_q = np.clip(np.round((pos.astype(np.float64) - lo) / scale), 0, 65535)
+        pos_q = pos_q.astype(np.uint16)
+        nrm_q = np.clip(np.round(nrm.astype(np.float64) * 127.0), -127, 127)
+        pos_rows = np.zeros((len(pos), 4), dtype=np.uint16)  # (x, y, z, pad)
+        pos_rows[:, :3] = pos_q
+        nrm_rows = np.zeros((len(pos), 4), dtype=np.int8)
+        nrm_rows[:, :3] = nrm_q.astype(np.int8)
+        attributes = [
+            (pos_rows, 5123, 8, {"min": [int(v) for v in pos_q.min(axis=0)],
+                                 "max": [int(v) for v in pos_q.max(axis=0)]}),
+            (nrm_rows, 5120, 4, {"normalized": True}),
+            (tex, 5126, 8, {}),
+            (bid, 5126, 4, {}),
+        ]
+        node["translation"] = [float(x) for x in lo]
+        node["scale"] = [float(s) for s in scale]
+    else:
+        attributes = [
+            (pos, 5126, None, {"min": [float(v) for v in pos.min(axis=0)],
+                               "max": [float(v) for v in pos.max(axis=0)]}),
+            (nrm, 5126, None, {}),
+            (tex, 5126, None, {}),
+            (bid, 5126, None, {}),
+        ]
+    attributes.append((indices, 5125, None, {}))  # UNSIGNED_INT
 
-    views = []
-    accessors = []
-    bin_parts: list[bytes] = []
-    offset = 0
-
-    def add(arr: np.ndarray, comp_type: int, acc_type: str, n_comp: int, with_minmax: bool):
-        nonlocal offset
-        raw = arr.astype(arr.dtype, copy=False).tobytes()
-        raw = _pad(raw, 4, b"\x00")
-        views.append({"buffer": 0, "byteOffset": offset, "byteLength": len(raw)})
-        acc = {
-            "bufferView": len(views) - 1,
-            "componentType": comp_type,
-            "count": n,
-            "type": acc_type,
-        }
-        if with_minmax:
-            a2 = arr.reshape(n, n_comp)
-            acc["min"] = [float(v) for v in a2.min(axis=0)]
-            acc["max"] = [float(v) for v in a2.max(axis=0)]
-        accessors.append(acc)
-        bin_parts.append(raw)
-        offset += len(raw)
-
-    add(pos, 5126, "VEC3", 3, True)  # FLOAT
-    add(nrm, 5126, "VEC3", 3, False)
-    add(tex, 5126, "VEC2", 2, False)
-    add(bid, 5126, "SCALAR", 1, False)
-
-    index_accessor = None
-    if indices is not None:
-        raw = _pad(indices.astype(np.uint32).tobytes(), 4, b"\x00")
-        views.append({"buffer": 0, "byteOffset": offset, "byteLength": len(raw)})
-        accessors.append({
-            "bufferView": len(views) - 1,
-            "componentType": 5125,  # UNSIGNED_INT
-            "count": int(len(indices)),
-            "type": "SCALAR",
-        })
-        index_accessor = len(accessors) - 1
-        bin_parts.append(raw)
-        offset += len(raw)
-
-    gltf = {
-        "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
-        "scene": 0,
-        "scenes": [{"nodes": [0]}],
-        "nodes": [{"mesh": 0}],
-        "meshes": [{
-            "primitives": [{
-                "attributes": {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3},
-                "mode": 4,
-                **({"indices": index_accessor} if index_accessor is not None else {}),
-            }]
-        }],
-        "buffers": [{"byteLength": offset}],
-        "bufferViews": views,
-        "accessors": accessors,
-    }
-    return _glb_bytes(gltf, b"".join(bin_parts))
-
-
-def _pack_glb_meshless(quantized: bool) -> bytes:
-    """Spec-valid GLB for an EMPTY mesh: asset + one meshless node, no
-    accessors/bufferViews/buffers (glTF forbids zero-length ones)."""
-    gltf = {
-        "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
-        "scene": 0,
-        "scenes": [{"nodes": [0]}],
-        "nodes": [{}],
-    }
-    if quantized:
-        gltf["extensionsUsed"] = ["KHR_mesh_quantization"]
-        gltf["extensionsRequired"] = ["KHR_mesh_quantization"]
-    return _glb_bytes(gltf, None)
-
-
-def _pack_glb_quantized(
-    pos: np.ndarray,
-    nrm: np.ndarray,
-    tex: np.ndarray,
-    bid: np.ndarray,
-    indices: np.ndarray,
-) -> bytes:
-    """KHR_mesh_quantization GLB: POSITION uint16 grid + node TRS dequant,
-    NORMAL normalized int8; TEXCOORD_0/_BATCHID stay float (wall UVs tile
-    past [0,1], which normalized quantization cannot represent).
-
-    Alignment per glTF 2.0: vertex bufferViews carry byteStride as a
-    multiple of 4, so VEC3<u16> packs at stride 8 (2 pad bytes) and
-    VEC3<i8> at stride 4 (1 pad byte)."""
-    n = len(pos)
-    bbox_min = pos.min(axis=0) if n else np.zeros(3, np.float32)
-    bbox_max = pos.max(axis=0) if n else np.zeros(3, np.float32)
-    extent = (bbox_max - bbox_min).astype(np.float64)
-    scale = np.where(extent > 0, extent / 65535.0, 1.0)
-    pos_q = np.clip(
-        np.round((pos.astype(np.float64) - bbox_min) / scale), 0, 65535
-    ).astype(np.uint16)
-    nrm_q = np.clip(np.round(nrm.astype(np.float64) * 127.0), -127, 127).astype(np.int8)
-
-    views = []
-    accessors = []
-    bin_parts: list[bytes] = []
-    offset = 0
-
-    def add_view(raw: bytes, stride: int | None = None):
-        nonlocal offset
-        raw = _pad(raw, 4, b"\x00")
+    views, accessors, chunks, offset = [], [], [], 0
+    for (arr, comp_type, stride, extra), acc_type in zip(
+        attributes, ("VEC3", "VEC3", "VEC2", "SCALAR", "SCALAR")
+    ):
+        raw = _pad(arr.tobytes(), 4, b"\x00")
         view = {"buffer": 0, "byteOffset": offset, "byteLength": len(raw)}
         if stride is not None:
             view["byteStride"] = stride
+        accessors.append({
+            "bufferView": len(views), "componentType": comp_type, "count": len(arr),
+            "type": acc_type, **extra,
+        })
         views.append(view)
-        bin_parts.append(raw)
+        chunks.append(raw)
         offset += len(raw)
-        return len(views) - 1
 
-    # POSITION: (x, y, z, pad) uint16 rows -> stride 8
-    pos_rows = np.zeros((n, 4), dtype=np.uint16)
-    pos_rows[:, :3] = pos_q
-    v = add_view(pos_rows.tobytes(), stride=8)
-    accessors.append({
-        "bufferView": v, "componentType": 5123, "count": n, "type": "VEC3",
-        "min": [int(x) for x in (pos_q.min(axis=0) if n else [0, 0, 0])],
-        "max": [int(x) for x in (pos_q.max(axis=0) if n else [0, 0, 0])],
-    })
-    # NORMAL: (x, y, z, pad) int8 rows -> stride 4, normalized
-    nrm_rows = np.zeros((n, 4), dtype=np.int8)
-    nrm_rows[:, :3] = nrm_q
-    v = add_view(nrm_rows.tobytes(), stride=4)
-    accessors.append({
-        "bufferView": v, "componentType": 5120, "count": n, "type": "VEC3",
-        "normalized": True,
-    })
-    v = add_view(tex.astype(np.float32).tobytes(), stride=8)
-    accessors.append({"bufferView": v, "componentType": 5126, "count": n, "type": "VEC2"})
-    v = add_view(bid.astype(np.float32).tobytes(), stride=4)
-    accessors.append({"bufferView": v, "componentType": 5126, "count": n, "type": "SCALAR"})
-    v = add_view(indices.astype(np.uint32).tobytes())
-    accessors.append({
-        "bufferView": v, "componentType": 5125, "count": int(len(indices)),
-        "type": "SCALAR",
-    })
-
-    gltf = {
-        "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
-        "scene": 0,
-        "scenes": [{"nodes": [0]}],
-        "nodes": [{
-            "mesh": 0,
-            "translation": [float(x) for x in bbox_min],
-            "scale": [float(s) for s in scale],
-        }],
-        "meshes": [{
-            "primitives": [{
-                "attributes": {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3},
-                "mode": 4,
-                "indices": 4,
-            }]
-        }],
-        "buffers": [{"byteLength": offset}],
-        "bufferViews": views,
-        "accessors": accessors,
-        "extensionsUsed": ["KHR_mesh_quantization"],
-        "extensionsRequired": ["KHR_mesh_quantization"],
-    }
-    return _glb_bytes(gltf, b"".join(bin_parts))
+    gltf = _gltf(
+        node, quantize,
+        meshes=[{"primitives": [{
+            "attributes": {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3},
+            "mode": 4,
+            "indices": 4,
+        }]}],
+        buffers=[{"byteLength": offset}],
+        bufferViews=views,
+        accessors=accessors,
+    )
+    return _glb_bytes(gltf, b"".join(chunks))
 
 
 def unpack_glb(glb: bytes) -> dict:
-    """Parse a GLB from this sink back to numpy arrays (uncompressed or
+    """Parse a GLB from this sink back to numpy arrays (plain or
     KHR_mesh_quantization; the decode half of the round-trip pin). Returns
     {position (float32 world-space), normal (float32 unit-ish), uv, batch_id,
     indices, quantized: bool}."""
@@ -348,7 +222,7 @@ def unpack_glb(glb: bytes) -> dict:
             "position": empty3, "normal": empty3,
             "uv": np.empty((0, 2), dtype=np.float32),
             "batch_id": np.empty(0, dtype=np.float32),
-            "indices": None,  # no mesh => no index accessor (same as non-indexed)
+            "indices": None,  # no mesh => no index accessor
             "quantized": quantized,
         }
     blen, btype = struct.unpack("<II", glb[20 + jlen : 28 + jlen])
@@ -386,66 +260,9 @@ def unpack_glb(glb: bytes) -> dict:
         "normal": nrm.astype(np.float32),
         "uv": read_acc(attrs["TEXCOORD_0"]).astype(np.float32),
         "batch_id": read_acc(attrs["_BATCHID"]).reshape(-1).astype(np.float32),
-        "indices": read_acc(prim["indices"]).reshape(-1) if "indices" in prim else None,
+        "indices": read_acc(prim["indices"]).reshape(-1),
         "quantized": quantized,
     }
-
-
-def _pack_glb_draco(
-    pos: np.ndarray,
-    nrm: np.ndarray,
-    tex: np.ndarray,
-    bid: np.ndarray,
-    indices: np.ndarray,
-    compress,
-) -> bytes:
-    """GLB whose single primitive is Draco-compressed via the supplied codec.
-    Accessors keep count/type/min/max (they describe the DECOMPRESSED data and
-    deliberately omit bufferView, per KHR_draco_mesh_compression); the one
-    bufferView holds the codec bytes."""
-    blob = _pad(bytes(compress(pos, nrm, tex, bid, indices)), 4, b"\x00")
-    n = len(pos)
-
-    def acc(comp_type: int, acc_type: str, count: int, arr=None):
-        a = {"componentType": comp_type, "count": count, "type": acc_type}
-        if arr is not None:
-            a["min"] = [float(v) for v in arr.min(axis=0)]
-            a["max"] = [float(v) for v in arr.max(axis=0)]
-        return a
-
-    gltf = {
-        "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
-        "scene": 0,
-        "scenes": [{"nodes": [0]}],
-        "nodes": [{"mesh": 0}],
-        "meshes": [{
-            "primitives": [{
-                "attributes": {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3},
-                "mode": 4,
-                "indices": 4,
-                "extensions": {
-                    "KHR_draco_mesh_compression": {
-                        "bufferView": 0,
-                        "attributes": {
-                            "POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3
-                        },
-                    }
-                },
-            }]
-        }],
-        "buffers": [{"byteLength": len(blob)}],
-        "bufferViews": [{"buffer": 0, "byteOffset": 0, "byteLength": len(blob)}],
-        "accessors": [
-            acc(5126, "VEC3", n, pos.reshape(n, 3)),
-            acc(5126, "VEC3", n),
-            acc(5126, "VEC2", n),
-            acc(5126, "SCALAR", n),
-            acc(5125, "SCALAR", int(len(indices))),
-        ],
-        "extensionsUsed": ["KHR_draco_mesh_compression"],
-        "extensionsRequired": ["KHR_draco_mesh_compression"],
-    }
-    return _glb_bytes(gltf, blob)
 
 
 def _pad_from(data: bytes, start: int, boundary: int, pad_byte: bytes) -> bytes:
@@ -498,30 +315,17 @@ def _json_safe(v):
     return v
 
 
-def b3dm_for_tile(
-    geo_row: dict, batch_row: dict | None, compress=None, quantize: bool = False
-) -> bytes:
-    """One build_tiles_3d output row (+ its batch_tables row) → b3dm bytes.
+def b3dm_for_tile(row: dict, batch_columns: list[str]) -> bytes:
+    """One build_tiles_3d row, left-joined with its batch_tables row → b3dm bytes.
 
-    featureTable = {BATCH_LENGTH}; batchTable = the pivoted per-building columns
-    (b3dmGenerator.ts:242-247 shape). `compress` is the optional Draco codec
-    seam, forwarded to pack_glb (None → byte-identical uncompressed tiles);
-    `quantize` emits KHR_mesh_quantization tiles (the in-sandbox compressed
-    artifact — see pack_glb)."""
-    feature_table = {"BATCH_LENGTH": int(geo_row["batch_length"])}
-    batch_table = {}
-    if batch_row:
-        # geometry-buffer columns are payload, not batch-table attributes
-        skip = {"tile_key", "batch_length", "position", "normal", "uv", "batch_id",
-                "texture_id", "color", "bbox", "n_vertices", "osm_ids"}
-        for k, v in batch_row.items():
-            if k in skip or v is None:
-                continue
-            batch_table[k] = _json_safe(v)
+    featureTable = {BATCH_LENGTH}; batchTable = the row's non-null
+    `batch_columns` in that order (b3dmGenerator.ts:242-247 shape), so a tile
+    without a batch row gets {}."""
+    feature_table = {"BATCH_LENGTH": int(row["batch_length"])}
+    batch_table = {c: _json_safe(row[c]) for c in batch_columns if row[c] is not None}
     glb = pack_glb(
-        np.asarray(geo_row["position"]), np.asarray(geo_row["normal"]),
-        np.asarray(geo_row["uv"]), np.asarray(geo_row["batch_id"]),
-        compress=compress, quantize=quantize,
+        np.asarray(row["position"]), np.asarray(row["normal"]),
+        np.asarray(row["uv"]), np.asarray(row["batch_id"]),
     )
     return pack_b3dm(glb, feature_table, batch_table)
 
@@ -532,12 +336,13 @@ def seed_tiles(tiles_df, batch_df, out_dir: str) -> int:
     each partition writes its own files (no driver collect of tile bytes).
     Returns the number of tiles written."""
     os.makedirs(os.path.join(out_dir, "b3dm"), exist_ok=True)
+    batch_columns = [c for c in batch_df.columns if c not in ("tile_key", "batch_length")]
     joined = tiles_df.join(batch_df.drop("batch_length"), "tile_key", "left")
 
     def _write(rows):
         for row in rows:
             d = row.asDict(recursive=True)
-            data = b3dm_for_tile(d, d)
+            data = b3dm_for_tile(d, batch_columns)
             path = os.path.join(out_dir, "b3dm", f"{d['tile_key']}.b3dm")
             tmp = path + ".tmp"
             with open(tmp, "wb") as f:

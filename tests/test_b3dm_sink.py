@@ -71,68 +71,6 @@ class TestGlbPacking:
         idx = np.frombuffer(glb[bin_start + iview["byteOffset"]:][: 6 * 4], np.uint32)
         assert np.array_equal(pos[idx], quad)
 
-    def test_weld_off_keeps_soup(self):
-        tri = np.zeros(9, np.float32)
-        glb = pack_glb(tri, tri, np.zeros(6, np.float32), np.zeros(3, np.float32), weld=False)
-        jlen = struct.unpack("<II", glb[12:20])[0]
-        gltf = json.loads(glb[20: 20 + jlen])
-        prim = gltf["meshes"][0]["primitives"][0]
-        assert "indices" not in prim
-        assert gltf["accessors"][0]["count"] == 3
-
-    def test_draco_seam_noop_is_uncompressed(self):
-        # default path (no codec supplied) must carry zero extension plumbing
-        quad = np.array(
-            [[0, 0, 0], [1, 0, 0], [1, 1, 0], [0, 0, 0], [1, 1, 0], [0, 1, 0]],
-            dtype=np.float32,
-        )
-        nrm = np.tile([0, 0, 1], 6).astype(np.float32)
-        glb = pack_glb(quad.ravel(), nrm, np.zeros(12, np.float32), np.zeros(6, np.float32))
-        assert b"KHR_draco_mesh_compression" not in glb
-        assert glb == pack_glb(
-            quad.ravel(), nrm, np.zeros(12, np.float32), np.zeros(6, np.float32),
-            compress=None,
-        )
-
-    def test_draco_seam_wires_extension(self):
-        """A supplied codec gets the WELDED mesh, and the GLB declares
-        KHR_draco_mesh_compression with the codec bytes as the only bufferView
-        and accessors that omit bufferView (they describe decompressed data)."""
-        quad = np.array(
-            [[0, 0, 0], [1, 0, 0], [1, 1, 0], [0, 0, 0], [1, 1, 0], [0, 1, 0]],
-            dtype=np.float32,
-        )
-        nrm = np.tile([0, 0, 1], 6).astype(np.float32)
-        seen = {}
-
-        def fake_codec(pos, n, t, b, indices):
-            seen["n_verts"] = len(pos)
-            seen["n_idx"] = len(indices)
-            return b"DRACOBYTES"
-
-        glb = pack_glb(
-            quad.ravel(), nrm, np.zeros(12, np.float32), np.zeros(6, np.float32),
-            compress=fake_codec,
-        )
-        assert seen == {"n_verts": 4, "n_idx": 6}  # welded before compressing
-        jlen = struct.unpack("<II", glb[12:20])[0]
-        gltf = json.loads(glb[20: 20 + jlen])
-        assert gltf["extensionsRequired"] == ["KHR_draco_mesh_compression"]
-        prim = gltf["meshes"][0]["primitives"][0]
-        ext = prim["extensions"]["KHR_draco_mesh_compression"]
-        assert ext["bufferView"] == 0
-        assert ext["attributes"] == {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3}
-        assert len(gltf["bufferViews"]) == 1
-        assert all("bufferView" not in a for a in gltf["accessors"])
-        assert gltf["accessors"][0]["count"] == 4  # decompressed vertex count
-        assert gltf["accessors"][4]["count"] == 6
-        boff = 20 + jlen
-        blen = struct.unpack("<II", glb[boff: boff + 8])[0]
-        assert glb[boff + 8: boff + 8 + blen].startswith(b"DRACOBYTES")
-        assert len(glb) % 8 == 0
-        magic, version, total = struct.unpack("<III", glb[:12])
-        assert magic == 0x46546C67 and total == len(glb)
-
     def test_b3dm_roundtrip(self):
         glb = pack_glb(
             np.zeros(9, np.float32), np.zeros(9, np.float32),
@@ -270,9 +208,8 @@ class TestTileServerFixture:
 
 
 class TestQuantizedGlb:
-    """Round-4: the KHR_mesh_quantization path — the sink's self-contained
-    compressed artifact (documented alternative to the reference's Draco
-    stage, b3dmGenerator.ts:182-195; no codec lib in this sandbox)."""
+    """The KHR_mesh_quantization path — the sink's compressed codec in place
+    of the reference's Draco stage (b3dmGenerator.ts:182-195)."""
 
     def _mesh(self):
         # two triangles over a realistic tile-frame extent, duplicated verts
@@ -338,18 +275,62 @@ class TestQuantizedGlb:
         assert len(quant) % 8 == 0  # b3dm embedding alignment
 
     def test_b3dm_for_tile_quantized(self):
-        from osm_data_3d_tiles_spark.sinks.b3dm import b3dm_for_tile, parse_b3dm, unpack_glb
+        from osm_data_3d_tiles_spark.sinks.b3dm import parse_b3dm, unpack_glb
 
         pos, nrm, uv, bid = self._mesh()
-        geo_row = {
-            "batch_length": 7, "position": pos.ravel(), "normal": nrm.ravel(),
-            "uv": uv.ravel(), "batch_id": bid,
-        }
-        data = b3dm_for_tile(geo_row, None, quantize=True)
+        glb = pack_glb(pos.ravel(), nrm.ravel(), uv.ravel(), bid, quantize=True)
+        data = pack_b3dm(glb, {"BATCH_LENGTH": 7}, {})
         out = parse_b3dm(data)
         assert out["feature_table"]["BATCH_LENGTH"] == 7
         decoded = unpack_glb(out["glb"])
         assert decoded["quantized"] and len(decoded["position"]) > 0
+
+    def test_plain_glb_bytes_pinned(self):
+        """The emitter's bytes are the contract: sha256 of the plain GLB of
+        this mesh, of the welded quad, and of the meshless GLBs."""
+        import hashlib
+
+        def sha(*arrays, **kw):
+            return hashlib.sha256(pack_glb(*arrays, **kw)).hexdigest()
+
+        pos, nrm, uv, bid = self._mesh()
+        assert sha(pos.ravel(), nrm.ravel(), uv.ravel(), bid) == (
+            "9af2471033cf529db228380452a234e61868a9ae2a7cba8ff5fe10d96404a6ea"
+        )
+        quad = np.array(
+            [[0, 0, 0], [1, 0, 0], [1, 1, 0], [0, 0, 0], [1, 1, 0], [0, 1, 0]],
+            dtype=np.float32,
+        )
+        quad_nrm = np.tile([0, 0, 1], 6).astype(np.float32)
+        assert sha(quad.ravel(), quad_nrm, np.zeros(12, np.float32), np.zeros(6, np.float32)) == (
+            "3d4fcfbde2c045c635182b270428e660f32957922ef32aa5c69c284e9b8eafe7"
+        )
+        empty = np.empty(0, np.float32)
+        assert sha(empty, empty, empty, empty) == (
+            "5cf6bdf317727728c7782e55bdb33ab94dcf07e83b71982302f452bf45c3f444"
+        )
+        assert sha(empty, empty, empty, empty, quantize=True) == (
+            "e0a4dc92c8ad33ba0dbbad0715e8bffbe4dcbd74a69aed7bc7756361501f27af"
+        )
+
+    def test_b3dm_for_tile_batch_columns(self):
+        """The batch table holds the named columns in the given order, drops
+        nulls, and is {} for a tile without a batch row (left join)."""
+        from osm_data_3d_tiles_spark.sinks.b3dm import b3dm_for_tile
+
+        pos, nrm, uv, bid = self._mesh()
+        row = {
+            "tile_key": "16_1_2", "batch_length": 2, "position": pos.ravel(),
+            "normal": nrm.ravel(), "uv": uv.ravel(), "batch_id": bid,
+            "osm_ids": [7, 8], "building_height": [3.0, np.float64("nan")],
+            "label": None, "osm_id": np.array([7, 8]),
+        }
+        out = parse_b3dm(b3dm_for_tile(row, ["osm_id", "label", "building_height"]))
+        assert list(out["batch_table"]) == ["osm_id", "building_height"]
+        assert out["batch_table"] == {"osm_id": [7, 8], "building_height": [3.0, None]}
+        missing = dict(row, osm_id=None, label=None, building_height=None)
+        out = parse_b3dm(b3dm_for_tile(missing, ["osm_id", "label", "building_height"]))
+        assert out["batch_table"] == {} and out["feature_table"] == {"BATCH_LENGTH": 2}
 
     def test_unpack_glb_reads_uncompressed_too(self):
         from osm_data_3d_tiles_spark.sinks.b3dm import pack_glb, unpack_glb, weld_vertices

@@ -15,6 +15,32 @@ TRIANGLE = np.array([[0.0, 0.0], [2.0, 0.0], [0.0, 2.0]])
 L_SHAPE = np.array([[0, 0], [3, 0], [3, 1], [1, 1], [1, 3], [0, 3]], dtype=float)
 
 
+class TestRingXy:
+    def test_row_list_and_arrow_object_array_decode_alike(self):
+        pts = [[1.5, -2.25], [3.0, 4.0], [1.5, -2.25]]
+        obj = np.empty(3, dtype=object)
+        for i, p in enumerate(pts):
+            obj[i] = np.asarray(p)
+        for ring in (pts, obj):
+            xy = g.ring_xy(ring)
+            assert xy.dtype == np.float64 and xy.shape == (3, 2)
+            assert np.array_equal(xy, np.asarray(pts))
+
+    def test_same_values_as_per_point_floats(self):
+        rng = np.random.default_rng(5)
+        ring = [[float(x), float(y)] for x, y in rng.normal(0, 2e7, (50, 2))]
+        expected = np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
+        assert np.array_equal(g.ring_xy(ring), expected)
+
+    def test_empty_ring_and_extra_coordinates(self):
+        assert g.ring_xy([]).shape == (0, 2)
+        assert g.ring_xy(np.empty(0, dtype=object)).shape == (0, 2)
+        assert np.array_equal(g.ring_xy([[1, 2, 3], [4, 5, 6]]), [[1.0, 2.0], [4.0, 5.0]])
+
+    def test_decoded_ring_is_not_copied(self):
+        assert np.shares_memory(g.ring_xy(SQUARE), SQUARE)
+
+
 class TestWinding:
     def test_signed_area_ccw_square(self):
         # sum((x2-x1)(y2+y1)): CCW square of side 4 → -32 (negative = CCW here)

@@ -2221,6 +2221,17 @@ class TestLearnBpe:
         assert got == expected
         assert ("a", "</w>") in {(m[1], m[2]) for m in got}
 
+    def test_unicode_whitespace_splits_words(self, spark):
+        from osm_data_3d_tiles_spark.operators.bpe import learn_bpe, word_counts
+
+        # NBSP (U+00A0) and EM SPACE (U+2003) separate words for str.split()
+        texts = ["low\u00a0lower\u2003lowest low", "low\u2003\u00a0lower"]
+        df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+        counts = {r["word"]: r["cnt"] for r in word_counts(df).collect()}
+        assert counts == {"low": 3, "lower": 2, "lowest": 1}
+        got = [tuple(r) for r in learn_bpe(df, num_merges=4).collect()]
+        assert got == self._python_reference(texts, 4)
+
 
 class TestDsirSelect:
     """dsir_select — DSIR importance-resampling data selection (Xie et al.
@@ -2305,6 +2316,23 @@ class TestDsirSelect:
             dsir_select(df, F.col("doc_id") < 2, k=0)
         with pytest.raises(ValueError):
             hashed_ngram_buckets(df, n_buckets=0)
+
+    def test_unicode_whitespace_splits_words(self, spark):
+        import hashlib
+        import re
+        from collections import Counter
+
+        from osm_data_3d_tiles_spark.operators.dsir import hashed_ngram_buckets
+
+        # NBSP (U+00A0) and EM SPACE (U+2003) separate words for re.split(r"\s+")
+        text = "alpha\u00a0beta\u2003gamma \u00a0delta"
+        ws = [w for w in re.split(r"\s+", text) if w]
+        assert len(ws) == 4
+        grams = ws + [f"{a} {b}" for a, b in zip(ws, ws[1:])]
+        expected = Counter(int(hashlib.md5(g.encode()).hexdigest()[:4], 16) % 256 for g in grams)
+        df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+        got = {r["bucket"]: r["cnt"] for r in hashed_ngram_buckets(df).collect()}
+        assert got == dict(expected)
 
 
 class TestMixDomains:
