@@ -1,5 +1,5 @@
-"""The flagship end-to-end plan: pages → geotag extract → cell-encode → broadcast
-PIP join → tile ownership → per-tile doc counts, with per-partition lineage
+"""The flagship end-to-end plan: pages → geotag + cell lookup + PIP refine in one
+Arrow stage → tile ownership → per-tile doc counts, with per-partition lineage
 metrics and snapshot checkpoints; and the seed plan that writes an extent's
 B3DM tiles and tileset.
 
@@ -8,8 +8,11 @@ MVT fetch/parse → parquet scan; per-tile worker → shuffle-by-tile stages; SQ
 claim → ownership window; B3DM batch table → groupBy(tile) pivot.
 
 Scale shape (the part the judge grades):
-- pages never shuffle until the final per-tile aggregation: extraction + cell encode
-  are narrow Arrow stages, the join side is broadcast;
+- pages never shuffle on a key until the final per-tile aggregation: the join
+  is one narrow Arrow stage over `url, html` (`flagship_join`) that parses the
+  geotag, looks up the z20 cells in a broadcast numpy building index and
+  decides the candidates there, so a page point never returns to the JVM to
+  meet a cell key in a hash join;
 - only the needed page columns enter the Python stage (column pruning survives
   because the UDF stage selects explicitly): the join path reads url + html and
   parses only the geotag, text extraction is a separate stage for text consumers;
@@ -24,6 +27,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,7 +38,7 @@ from ..functions import text as tx
 from ..operators.batch_table import batch_tables
 from ..operators.cells import building_cells
 from ..operators.ownership import owner_tiles
-from ..operators.spatial_join import spatial_join
+from ..operators.spatial_join import building_index, pip_stage, spatial_join
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -180,9 +184,26 @@ def checkpoint(
 
 
 def flagship_join(pages: DataFrame, buildings: DataFrame) -> DataFrame:
-    """(url, osm_id) exact join rows — pages inside building footprints."""
+    """(url, osm_id) exact join rows — pages inside building footprints.
+
+    One Arrow stage over `url, html`: per batch it parses the geotag, computes
+    the z20 cells and decides the candidates against a broadcast
+    `BuildingIndex` (`spatial_join.points_in_buildings`), so no page point
+    crosses back into the JVM before it is joined."""
     blds = buildings.filter(F.col("layer") == "buildings")
-    return spatial_join(geotagged_points(pages), blds, page_cols=("url",), building_cols=("osm_id",))
+    from ..session import with_min_parallelism
+
+    return pip_stage(
+        with_min_parallelism(pages.select("url", "html")),
+        building_index(blds, 20),
+        ("url",),
+        _html_xy,
+    )
+
+
+def _html_xy(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    geo = _geotag_xy(pdf["html"])
+    return geo["x"].to_numpy(), geo["y"].to_numpy()
 
 
 def flagship(
@@ -194,50 +215,44 @@ def flagship(
     - tile_assignment(osm_id, tile_key): each building's owner tile;
     - tile_doc_counts(tile_key, docs): join rows per owner tile.
 
-    join_rows and the shared cell pass are persisted, so the geotag extract and
-    the PIP refine run once however many outputs the caller reads:
+    join_rows and the z16 cell pass are persisted, so the join stage and the
+    cell pass run once however many outputs the caller reads:
     tile_doc_counts reads the cached join rows. The caller owns that cache and
     releases it (`unpersist` or `spark.catalog.clearCache()`) when done.
     Per-tile batch tables are not an output: seeding builds them with
     `operators.batch_table.batch_tables` (see `seed_extent`).
 
-    `refine` forwards to spatial_join: 'broadcast' (default — the measured
-    zero-shuffle plan for bounded per-extent dimensions) or 'cogroup' (the
-    planet-scale path for unbounded building dimensions; benched as
-    flagship_cogroup_secs so it has a recorded number, not just a parity
-    test)."""
-    from ..operators.cells import building_cells_multi
-
+    `refine='broadcast'` (default — the measured zero-shuffle plan for bounded
+    per-extent dimensions) joins in one Python stage (`flagship_join`); any
+    other value ('cogroup', the planet-scale path for unbounded building
+    dimensions, or 'auto') goes through `spatial_join` on `geotagged_points`."""
     blds = buildings.filter(F.col("layer") == "buildings")
-    # one geometry pass covers both zoom levels: z16 drives tile ownership,
-    # z20 drives the join prefilter
-    multi = building_cells_multi(blds, (m.Z_LEAF, 20)).persist()
-    cells = multi.filter(F.col("z") == m.Z_LEAF).select("osm_id", "tile_x", "tile_y")
-    join_cells = multi.filter(F.col("z") == 20).select("osm_id", "tile_x", "tile_y")
-    owners = owner_tiles(cells)
+    # the z16 cells feed the ownership window of all three outputs
+    assignment = owner_tiles(building_cells(blds).persist()).select("osm_id", "tile_key")
+    if refine == "broadcast":
+        join_rows = flagship_join(pages, blds)
+    else:
+        join_rows = spatial_join(
+            geotagged_points(pages), blds, z=20, page_cols=("url",), building_cols=("osm_id",),
+            refine=refine,
+        )
+    join_rows = join_rows.persist()
+    return {
+        "join_rows": join_rows,
+        "tile_assignment": assignment,
+        "tile_doc_counts": tile_doc_counts(join_rows, assignment),
+    }
 
-    # refine pinned to 'broadcast': the per-extent buildings dimension is
-    # bounded (BASELINE's measured plan is the zero-shuffle path) and 'auto'
-    # would spend an extra count() job on the dimension inside every timed run;
-    # planet-scale callers pass refine='cogroup' (or leave library-default
-    # 'auto') on their own dimensions
-    join_rows = spatial_join(
-        geotagged_points(pages), blds, z=20, page_cols=("url",), building_cols=("osm_id",),
-        precomputed_cells=join_cells, refine=refine,
-    ).persist()
-    assignment = owners.select("osm_id", "tile_key")
-    # assignment is one row per building (bounded dimension) — broadcast so the
-    # page-scale join_rows side never shuffles
-    tile_doc_counts = (
+
+def tile_doc_counts(join_rows: DataFrame, assignment: DataFrame) -> DataFrame:
+    """(tile_key, docs): join rows per owner tile. The assignment is one row
+    per building (bounded dimension), broadcast so the page-scale join rows
+    never shuffle before the aggregation."""
+    return (
         join_rows.join(F.broadcast(assignment), "osm_id")
         .groupBy("tile_key")
         .agg(F.count("*").alias("docs"))
     )
-    return {
-        "join_rows": join_rows,
-        "tile_assignment": assignment,
-        "tile_doc_counts": tile_doc_counts,
-    }
 
 
 def seed_extent(buildings: DataFrame, out_dir: str, extent, mode: str = "mercator") -> int:
@@ -273,39 +288,33 @@ def run_with_checkpoints(
     workdir: str,
 ) -> dict[str, DataFrame]:
     """Checkpointed flagship run: each stage snapshots to parquet + lineage metrics;
-    a rerun resumes from the last complete snapshot."""
+    a rerun resumes from the last complete snapshot. The geotag points are a
+    stage of their own here, so the join runs `spatial_join` over the
+    snapshot: its broadcast refine is the kernel of `flagship_join`, and
+    above `BROADCAST_GEOM_MAX_BUILDINGS` it cogroups instead."""
     mdir = os.path.join(workdir, "metrics")
     blds = buildings.filter(F.col("layer") == "buildings")
-
-    from ..operators.cells import building_cells_multi
 
     points = checkpoint(
         lambda: geotagged_points(pages),
         spark, os.path.join(workdir, "points"), "extract", mdir,
     )
-    # one triangulate+rasterize pass covers BOTH cell levels (same sharing as
-    # flagship()): z16 drives ownership, z20 is the PIP-join prefilter
-    # snapshot name 'cells_multi' (not the pre-multi-level 'cells'): a workdir
-    # checkpointed by the single-level version must rebuild, not resume; the
-    # required_cols guard rebuilds even a same-named stale snapshot
-    multi = checkpoint(
-        lambda: building_cells_multi(blds, (m.Z_LEAF, 20)),
-        spark, os.path.join(workdir, "cells_multi"), "cells", mdir,
-        required_cols=("z", "osm_id", "tile_x", "tile_y"),
+    # z16 cells only: the broadcast join indexes the buildings' geometry
+    # itself, and the cogroup join computes its z20 cells
+    cells = checkpoint(
+        lambda: building_cells(blds),
+        spark, os.path.join(workdir, "cells"), "cells", mdir,
+        required_cols=("osm_id", "tile_x", "tile_y"),
     )
-    cells = multi.filter(F.col("z") == m.Z_LEAF).select("osm_id", "tile_x", "tile_y")
-    join_cells = multi.filter(F.col("z") == 20).select("osm_id", "tile_x", "tile_y")
     owners = checkpoint(
         lambda: owner_tiles(cells), spark, os.path.join(workdir, "owners"), "owners", mdir
     )
     join_rows = checkpoint(
-        lambda: spatial_join(points, blds, precomputed_cells=join_cells),
+        lambda: spatial_join(points, blds, z=20),
         spark, os.path.join(workdir, "join_rows"), "join", mdir,
     )
     counts = checkpoint(
-        lambda: join_rows.join(owners.select("osm_id", "tile_key"), "osm_id")
-        .groupBy("tile_key")
-        .agg(F.count("*").alias("docs")),
+        lambda: tile_doc_counts(join_rows, owners.select("osm_id", "tile_key")),
         spark, os.path.join(workdir, "tile_doc_counts"), "counts", mdir,
     )
     return {

@@ -90,9 +90,11 @@ class TestSpatialJoin:
 
         pts = geotagged_points(pages)
         blds = buildings.filter(F.col("layer") == "buildings")
-        a = spatial_join(pts, blds, refine="broadcast").toPandas()
-        b = spatial_join(pts, blds, refine="cogroup").toPandas()
-        key = lambda df: sorted(zip(df["url"], df["osm_id"]))
+        cols = ("osm_id", "height")
+        a = spatial_join(pts, blds, building_cols=cols, refine="broadcast").toPandas()
+        b = spatial_join(pts, blds, building_cols=cols, refine="cogroup").toPandas()
+        key = lambda df: sorted(zip(df["url"], df["osm_id"], df["height"].fillna(-1.0)))
+        assert list(a.columns) == list(b.columns) == ["url", "osm_id", "height"]
         assert key(a) == key(b)
         assert len(a) > 0
 
@@ -135,28 +137,25 @@ def _plan_paths(df, into_cache=False):
     return walk(df._jdf.queryExecution().executedPlan(), [])
 
 
-def _exchange_between_python_stages(path) -> bool:
-    """refine MapInPandas (url, osm_id) above a shuffle Exchange above the
-    extract MapInPandas (url, x, y), with no broadcast in between: the probe
-    side of the join, extract and refine in separate tasks."""
-    names = [n for n, _ in path]
-    for i, (name, cols) in enumerate(path):
-        if name != "MapInPandas" or "osm_id" not in cols:
-            continue
-        for k in range(i + 1, len(path)):
-            name_k, cols_k = path[k]
-            if name_k == "BroadcastExchange":
-                break
-            if name_k == "MapInPandas" and {"url", "x", "y"} <= cols_k:
-                return "Exchange" in names[i + 1:k]
-    return False
+def _python_stages(paths):
+    """(input columns, names of the nodes below) of every MapInPandas on the
+    plan paths, each node once."""
+    seen = {}
+    for path in paths:
+        for i, (name, _) in enumerate(path):
+            if name == "MapInPandas":
+                key = tuple((n, frozenset(c)) for n, c in path[: i + 1])
+                below = [n for n, _ in path[i + 1:]]
+                seen.setdefault(key, (path[i + 1][1], set()))[1].update(below)
+    return list(seen.values())
 
 
 class TestFlagshipPlan:
     def test_each_stage_runs_once(self, spark, pages, buildings):
         """No text extraction on the join path; tile_doc_counts reads the
-        cached join rows instead of re-running extract + refine; the probe-side
-        Exchange keeps the two Python stages in separate tasks."""
+        cached join rows instead of re-running extract + refine; the join rows
+        come from one Python stage that reads only url + html and meets the
+        buildings in Python, not in a BroadcastHashJoin."""
         out = flagship(pages, buildings)
         try:
             for name, df in out.items():
@@ -167,10 +166,58 @@ class TestFlagshipPlan:
             names = {n for p in _plan_paths(counts) for n, _ in p}
             assert "InMemoryTableScan" in names
             assert "MapInPandas" not in names
-            paths = _plan_paths(out["join_rows"], into_cache=True)
-            assert any(_exchange_between_python_stages(p) for p in paths)
+            stages = _python_stages(_plan_paths(out["join_rows"], into_cache=True))
+            assert len(stages) == 1
+            reads, below = stages[0]
+            assert reads == {"url", "html"}
+            assert "BroadcastHashJoin" not in below
         finally:
             spark.catalog.clearCache()
+
+    def test_layout_independent(self, spark, pages, buildings):
+        """join_rows and tile_doc_counts do not depend on the partition layout:
+        1 vs 16 shuffle partitions, pages in 1 vs 13 partitions."""
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        results = []
+        try:
+            for shuffle, parts in ((1, 1), (16, 13)):
+                spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+                out = flagship(pages.repartition(parts), buildings)
+                rows = sorted((r["url"], r["osm_id"]) for r in out["join_rows"].collect())
+                counts = sorted(tuple(r) for r in out["tile_doc_counts"].collect())
+                results.append((rows, counts))
+                spark.catalog.clearCache()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
+            spark.catalog.clearCache()
+        assert results[0] == results[1]
+        assert len(results[0][0]) > 0 and len(results[0][1]) > 0
+
+
+class TestNonFiniteGeotag:
+    def test_pole_and_out_of_range_latitudes_join_nothing(self, spark):
+        """lat = -90 gives y = -inf and |lat| > 90 gives y = NaN (or a point
+        off the grid at lat = 90): such pages join nothing and fail nothing,
+        while a page inside a footprint still joins."""
+        from osm_data_3d_tiles_spark.plans.pipeline import flagship_join
+
+        lon, lat = 4.85, 45.75
+        x, y = (float(v[0]) for v in m.lonlat_to_3857(np.array([lon]), np.array([lat])))
+        ring = [[x - 5, y - 5], [x + 5, y - 5], [x + 5, y + 5], [x - 5, y + 5], [x - 5, y - 5]]
+        blds = spark.createDataFrame(
+            [(7, "buildings", [ring], ["outer"])],
+            "osm_id long, layer string, geometry array<array<array<double>>>, "
+            "ring_types array<string>",
+        )
+        tags = {"in": f"{lat};{lon}", "south": f"-90;{lon}", "north": f"90;{lon}",
+                "over": f"95;{lon}", "under": f"-91.5;{lon}", "none": None}
+        rows = [
+            (url, (f'<meta name="geo.position" content="{tag}">' if tag else "<p>x</p>").encode())
+            for url, tag in tags.items()
+        ]
+        pages_df = spark.createDataFrame(rows, "url string, html binary")
+        got = [tuple(r) for r in flagship_join(pages_df, blds).collect()]
+        assert got == [("in", 7)]
 
 
 class TestOwnership:

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from osm_data_3d_tiles_spark.operators.spatial_join import salted_count
 from osm_data_3d_tiles_spark.plans.pipeline import (
     checkpoint,
+    flagship,
     partition_lineage,
     run_with_checkpoints,
 )
@@ -127,3 +128,19 @@ class TestCheckpointResume:
         lineage = spark.read.parquet(os.path.join(wd, "metrics", "lineage"))
         stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
         assert {"extract", "cells", "owners", "join"} <= stages
+
+    def test_checkpointed_run_equals_flagship(self, spark, tmp_path):
+        """The checkpointed composition returns flagship's join rows and per-tile
+        counts."""
+        pages = fx.load_fixture(spark, "pages", 0.001)
+        buildings = fx.load_fixture(spark, "buildings", 0.001)
+        ckpt = run_with_checkpoints(spark, pages, buildings, str(tmp_path / "wd"))
+        out = flagship(pages, buildings)
+        try:
+            for name in ("join_rows", "tile_doc_counts"):
+                a = sorted(tuple(r) for r in ckpt[name].select(*out[name].columns).collect())
+                b = sorted(tuple(r) for r in out[name].collect())
+                assert a == b, name
+                assert len(a) > 0, name
+        finally:
+            spark.catalog.clearCache()
